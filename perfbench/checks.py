@@ -41,7 +41,6 @@ class Oracle:
     def __init__(self, corpus_dir: Path, sql: dict[str, str]) -> None:
         self.sql = sql
         self.con = duckdb.connect()
-        self.con.sql("SET threads TO 1")
         for t in CORPUS_TABLES:
             self.con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{corpus_dir / f'{t}.parquet'}'")
         self._cache: dict[str, tuple[tuple[str, ...], list[tuple]]] = {}

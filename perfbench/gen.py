@@ -7,7 +7,7 @@ row for ingest; documents/embeddings/orders for the corpus) but is
 synthesised from the seed, so the benchmark needs nothing outside its
 checkout.
 
-Ingest batches follow the fixed kind cycle ``BLOCK``; the seed sets every
+Ingest batches follow the fixed kind cycle ``CYCLE``; the seed sets every
 per-batch parameter (rows sampled, damaged column, damage fraction,
 shift factor, undersize share).  A fixed cycle keeps the mix, and so the
 latency distribution, the same across seeds.  For each batch the generator also derives the
@@ -27,11 +27,9 @@ import pyarrow.parquet as pq
 
 # --- ingest ---------------------------------------------------------------
 
-BLOCK = (  # 16 batches take one pipeline run, 4 heal and re-run
-    "clean", "clean", "null_breach", "mean_shift", "clean",
-    "clean", "required_null", "non_numeric", "clean", "mean_shift",
-    "clean", "clean", "undersized", "clean", "required_null",
-    "clean", "mean_shift", "missing_column", "clean", "clean",
+CYCLE = (  # 8 batches take one pipeline run, 4 heal and re-run
+    "clean", "clean", "null_breach", "mean_shift", "clean", "required_null",
+    "non_numeric", "clean", "undersized", "clean", "missing_column", "clean",
 )
 
 INT_COLS = ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
@@ -89,9 +87,7 @@ class Batch:
 
 class IngestGenerator:
     """Writes CSV batches sampled from a seeded pool of ``pool_rows``
-    lineitem/orders rows.  Each client (an independent pipeline with its
-    own workspace) gets its own batch stream; ``batch(client, i)`` is
-    deterministic in (seed, client, i)."""
+    lineitem/orders rows; ``batch(i)`` is deterministic in (seed, i)."""
 
     def __init__(self, seed: int, batch_rows: int, pool_rows: int = 60_000):
         self.seed = seed
@@ -121,7 +117,7 @@ class IngestGenerator:
         self.text = {c: self._fmt(c, nums[c]) for c in nums}
         self.text.update(strs)
         self.contract = contract_dict(batch_rows)
-        self.baseline: dict[int, dict[str, float]] = {}
+        self.baseline: dict[str, float] = {}
 
     @staticmethod
     def _fmt(col: str, v: np.ndarray) -> np.ndarray:
@@ -129,21 +125,24 @@ class IngestGenerator:
             return v.astype(np.int64).astype(str).astype(object)
         return np.char.mod("%.2f", v).astype(object)
 
-    def warmup_batch(self, client: int, out_dir: Path) -> Batch:
-        """A clean batch whose profile becomes the client's drift baseline."""
-        batch = self._make(out_dir / "warmup.csv", "clean", [2, client], baseline=None)
-        self.baseline[client] = batch.expected.pop("means")
+    def warmup_batch(self, out_dir: Path) -> Batch:
+        """A clean batch whose profile becomes the drift baseline."""
+        batch = self._make(-1, out_dir / "warmup.csv", "clean", [2], baseline=None)
+        self.baseline = batch.expected.pop("means")
         return batch
 
-    def batch(self, client: int, i: int, out_dir: Path, offset: int = 0) -> Batch:
-        """Batch ``i`` of a client whose kind sequence starts at ``offset``."""
-        kind = BLOCK[(i + offset) % len(BLOCK)]
-        batch = self._make(out_dir / f"batch_{i:06d}.csv", kind, [4, client, i],
-                           baseline=self.baseline[client])
-        batch.index = i
-        return batch
+    def warm_batch(self, n: int, kind: str, out_dir: Path) -> Batch:
+        """Set-up batch ``n`` after the baseline one (negative indices)."""
+        return self._make(-2 - n, out_dir / f"warm_{n}.csv", kind, [5, n],
+                          baseline=self.baseline)
 
-    def _make(self, path: Path, kind: str, key: list[int],
+    def batch(self, i: int, out_dir: Path) -> Batch:
+        """Batch ``i``; its kind is ``CYCLE[i % len(CYCLE)]``."""
+        kind = CYCLE[i % len(CYCLE)]
+        return self._make(i, out_dir / f"batch_{i:06d}.csv", kind, [4, i],
+                          baseline=self.baseline)
+
+    def _make(self, index: int, path: Path, kind: str, key: list[int],
               baseline: dict[str, float] | None) -> Batch:
         rng = np.random.default_rng([self.seed, *key])
         rows = self.batch_rows
@@ -171,7 +170,7 @@ class IngestGenerator:
             expected = {"means": {c: float(np.nanmean(v)) for c, v in nums.items()}}
         else:
             expected = self._expect(cols, rows, nums, baseline)
-        return Batch(-1, kind, path, rows, path.stat().st_size, expected)
+        return Batch(index, kind, path, rows, path.stat().st_size, expected)
 
     def _expect(self, cols: list[str], rows: int, nums: dict[str, np.ndarray],
                 baseline: dict[str, float]) -> dict[str, Any]:

@@ -9,7 +9,8 @@ the caller looks the name up.
 
 Each span gets its own Spark job group, so after the run every Spark job,
 and through it every stage, is attributed to the innermost span that was
-open when the job was submitted.  Spans stay in memory until the run ends.
+open when the job was submitted.  Spans stay in memory until the run ends;
+``dump`` then writes them out as JSON lines.
 
 ``NullTracer`` is the untraced twin: same interface, no work.
 """
@@ -18,8 +19,8 @@ from __future__ import annotations
 
 import functools
 import itertools
+import json
 import os
-import threading
 from collections import defaultdict
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
@@ -74,19 +75,13 @@ class Tracer:
         self.sc = None
         self.own_s = 0.0  # time spent in the tracer's own bookkeeping
         self._ids = itertools.count(1)
-        self._local = threading.local()
-        self._lock = threading.Lock()
+        self._stack: list[Span] = []  # open spans; the benchmark calls from one thread
         self._patches: list[tuple[ModuleType, str, Any]] = []
-
-    def _stack(self) -> list[Span]:
-        if not hasattr(self._local, "stack"):
-            self._local.stack = []
-        return self._local.stack
 
     @contextmanager
     def span(self, layer: str, op: str) -> Iterator[Span]:
         c0 = perf_counter()
-        stack = self._stack()
+        stack = self._stack
         sp = Span(next(self._ids), stack[-1].id if stack else 0, layer, op)
         stack.append(sp)
         if self.sc is not None:
@@ -103,8 +98,7 @@ class Tracer:
                     self.sc.setJobGroup(stack[-1].group, f"{stack[-1].layer}.{stack[-1].op}")
                 else:
                     self.sc.setLocalProperty("spark.jobGroup.id", None)
-            with self._lock:
-                self.spans.append(sp)
+            self.spans.append(sp)
             self.own_s += perf_counter() - sp.t1
 
     # --- rebinding -------------------------------------------------------
@@ -152,6 +146,18 @@ class Tracer:
                     agg["input_mb"] += st.inputBytes() / MB
                     agg["shuffle_write_mb"] += st.shuffleWriteBytes() / MB
             sp.spark = agg
+
+
+    def dump(self, path: Path, origin: float) -> None:
+        """Write every span as one JSON line, times relative to ``origin``."""
+        path.parent.mkdir(parents=True, exist_ok=True)
+        with open(path, "w") as f:
+            for s in sorted(self.spans, key=lambda s: s.t0):
+                f.write(json.dumps({
+                    "id": s.id, "parent": s.parent, "layer": s.layer, "op": s.op,
+                    "start_s": s.t0 - origin, "dur_s": s.dur, "spark": s.spark,
+                    "tags": s.tags,
+                }) + "\n")
 
 
 def index_store_builds(store: Path) -> Callable[[Span, Callable[[], Any]], Any]:

@@ -1,29 +1,27 @@
-"""The three benchmark workloads, driven through the package's public
-functions.
+"""The benchmark workloads, driven through the package's public functions.
 
-- ``ingest_heal``: ``INGEST_CLIENTS`` independent pipelines (own workspace,
-  contract, warehouse and incident log) each push a stream of CSV batches
-  through ``runner.run_single_pipeline``; a batch that fails the DQ gate
-  goes through ``healing.apply_self_healing`` and is re-run; every stage
-  is appended with ``incidents.log_incident``; after each batch the
-  pipeline's dashboard refreshes over its growing incident log.
-- ``ann_serve``: one closed-loop client; each request is a seeded pick of
-  a serve query over indexes built during set-up (or the one-pass sketch
-  profile of the same corpus).
+- ``ingest_heal``: one pipeline pushes a stream of CSV batches through
+  ``runner.run_single_pipeline``; a batch that fails the DQ gate goes
+  through ``healing.apply_self_healing`` and is re-run; every stage is
+  appended with ``incidents.log_incident``; after each batch the
+  dashboard refreshes over the growing incident log.
+- ``ann_serve``: one closed-loop client; requests come in rounds that
+  serve each of ``SERVE_OPS`` once, in a seeded order, over indexes built
+  during set-up.
 
 Every run is: seeded inputs (untimed) -> set-up (session start, warm-up,
 index builds; this is ``setup_s``) -> a measured window -> output checks.
-An untraced run measures for ``seconds``.  A traced run processes a fixed
-quota instead (one block of ingest batches, two rounds of serve
-requests), so its counters repeat exactly; its per-layer figures
-are per quota, except ``session.*``, which covers set-up.
+An untraced run starts new batch cycles or serve rounds for ``seconds``
+and lets the last one finish.  A traced run processes a fixed quota
+instead (one cycle of ingest batches, two serve rounds), so its counters
+repeat; its per-layer figures are per quota, except ``session.*``, which
+covers set-up.
 """
 
 from __future__ import annotations
 
 import statistics
 import sys
-import threading
 from pathlib import Path
 from time import perf_counter
 from typing import Any, Callable
@@ -41,9 +39,10 @@ from self_healing_data_pipeline_agent_spark.registry import all_oracles, all_que
 from self_healing_data_pipeline_agent_spark.sources import index_store, tables
 
 PKG = "self_healing_data_pipeline_agent_spark"
+SPANS_DIR = ".perfbench_spans"  # a traced run's spans, beside the work directory
 
 INGEST_ROWS = 20_000
-INGEST_CLIENTS = 5  # divides len(gen.BLOCK): a traced run covers one block exactly
+PREGEN_BATCHES = 2 * len(gen.CYCLE)  # a 20 s window runs one or two cycles
 HISTORY_ROWS = 50
 CORPUS = {"n_docs": 1000, "n_vecs": 500, "n_orders": 15_000}
 # Six index-backed serve queries plus one sketch profile over the same corpus.
@@ -51,8 +50,9 @@ SERVE_OPS = ("ann_ivf_kmeans_serve", "ann_pq_serve", "ann_lsh_serve",
              "embedding_near_dup_serve", "semantic_dedup_serve", "minhash_lsh_serve",
              "one_pass_profile")
 SERVE_TRACE_ROUNDS = 2
-# Tail percentile: the highest with >= 10 samples beyond it at the ~25
-# operations a run completes on a 4-core machine (recorded in BENCHMARK.json).
+# Tail percentile, recorded in BENCHMARK.json.  A 20 s run on a 4-core
+# machine completes one 12-batch cycle or three 7-request rounds, so p60
+# has 4 to 8 samples beyond it.
 TAIL_PCT = 60
 
 
@@ -73,15 +73,14 @@ class Run:
                  work: Path, session_cls, sampler_cls) -> None:
         self.name, self.seed, self.seconds, self.trace = name, seed, seconds, trace
         self.work = work
+        self.spans_path = work.parents[1] / SPANS_DIR / f"{name}-seed{seed}.jsonl"
         self.tracer = sp.Tracer() if trace else sp.NullTracer()
         self.session_cls, self.sampler_cls = session_cls, sampler_cls
         self.failures: list[str] = []
         self.attempted = 0
-        self.lock = threading.Lock()
 
     def fail(self, what: str) -> None:
-        with self.lock:
-            self.failures.append(what)
+        self.failures.append(what)
 
     def start(self) -> None:
         """Session start; the set-up clock starts here."""
@@ -90,8 +89,8 @@ class Run:
             install_patches(self.tracer, self.work / "indexes")
         self.session = self.session_cls(self.work, self.tracer)
         self.spark = self.session.spark
-        self.sampler = self.sampler_cls(self.session.jvm_pid)
         if self.trace:
+            self.sampler = self.sampler_cls(self.session.jvm_pid)
             self.tracer.sc = self.spark.sparkContext
 
     def window(self) -> None:
@@ -100,11 +99,14 @@ class Run:
         self.setup_s = self.t_window - self.t_setup
 
     def finish(self) -> float:
-        """End the run; return peak RSS in MB."""
-        peak = self.sampler.stop()
+        """End the run; a traced run returns its peak RSS in MB (the
+        sampler reads /proc ten times a second, so only traced runs pay)."""
+        peak = 0.0
         if self.trace:
+            peak = self.sampler.stop()
             self.tracer.collect_spark()
             self.tracer.unpatch_all()
+            self.tracer.dump(self.spans_path, self.t_setup)
         self.session.stop()
         return peak
 
@@ -168,9 +170,7 @@ def per_layer(run: Run, units: float, unit_latencies: list[float],
     appends = [s for s in window if s.layer == "incidents" and s.op == "append"]
     out["incidents.append.calls"] = len(appends) / units
     out["incidents.append.busy_s"] = sum(s.dur for s in appends) / units
-    logs = sorted(run.work.glob("ingest/c*/data/metadata/incidents"))
-    out["incidents.files"] = (
-        sum(len(list(p.glob("*.parquet"))) for p in logs) / len(logs) if logs else 0.0)
+    out["incidents.files"] = len(list(run.work.glob("ingest/data/metadata/incidents/*.parquet")))
 
     out["ingest.heal_recovery_p50_s"] = out["ingest.dashboard_p50_ms"] = 0.0  # set by ingest_heal
 
@@ -185,20 +185,20 @@ def per_layer(run: Run, units: float, unit_latencies: list[float],
 # --- ingest_heal ---------------------------------------------------------------
 
 class Pipeline:
-    """One client: an independent pipeline workspace and its batch stream."""
+    """The pipeline workspace (contract, warehouse, incident log) and the
+    benchmark's view of what it has logged."""
 
-    def __init__(self, run: Run, g: gen.IngestGenerator, k: int) -> None:
-        self.run, self.g, self.k = run, g, k
-        self.ws = run.work / "ingest" / f"c{k}"
+    def __init__(self, run: Run, g: gen.IngestGenerator) -> None:
+        self.run, self.g = run, g
+        self.ws = run.work / "ingest"
         self.raw = self.ws / "raw"
-        self.offset = k * len(gen.BLOCK) // INGEST_CLIENTS
         self.cfg = self.ws / "contract.yml"
         self.logged = 0
         self.last_run_id = ""
         self.last_status = ""
 
     def log(self, index: int, stage: str, status: str, **kw: Any) -> None:
-        run_id = f"{stage}-c{self.k}-b{index:06d}"
+        run_id = f"{stage}-b{index:06d}"
         with self.run.tracer.span("incidents", "append"):
             incidents.log_incident(
                 self.run.spark, self.ws, run_id=run_id, pipeline_name=runner.PIPELINE_NAME,
@@ -267,11 +267,11 @@ class Pipeline:
         took = perf_counter() - t0
         ids = [r["run_id"] for r in history]
         if counts["total"] != self.logged:
-            return took, f"dashboard c{self.k}: total {counts['total']} != {self.logged} logged"
+            return took, f"dashboard: total {counts['total']} != {self.logged} logged"
         if len(ids) != min(HISTORY_ROWS, self.logged) or ids != sorted(ids, reverse=True):
-            return took, f"dashboard c{self.k}: run history not the newest-first log"
+            return took, "dashboard: run history not the newest-first log"
         if row is None or row["status"] != self.last_status:
-            return took, f"dashboard c{self.k}: get_run({self.last_run_id}) wrong"
+            return took, f"dashboard: get_run({self.last_run_id}) wrong"
         return took, None
 
     def check(self, batch: gen.Batch, rec: dict[str, Any]) -> str | None:
@@ -288,78 +288,54 @@ class Pipeline:
         got["landed_rows"] = sum(pq.read_metadata(f).num_rows for f in table.glob("*.parquet"))
         bad = [k for k in got if got[k] != exp[k]]
         if bad:
-            return (f"batch c{self.k}/{batch.index} ({batch.kind}): "
+            return (f"batch {batch.index} ({batch.kind}): "
                     + "; ".join(f"{k} {got[k]} != expected {exp[k]}" for k in bad))
         return None
 
 
-def parallel(fn: Callable[[Pipeline], None], clients: list[Pipeline]) -> None:
-    """Run ``fn`` once per client, one thread each; re-raise the first error."""
-    errors: list[BaseException] = []
-
-    def body(c: Pipeline) -> None:
-        try:
-            fn(c)
-        except BaseException as exc:  # noqa: BLE001 - handed to the caller below
-            errors.append(exc)
-
-    threads = [threading.Thread(target=body, args=(c,)) for c in clients]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise errors[0]
-
-
 def ingest_heal(run: Run) -> dict[str, Any]:
     g = gen.IngestGenerator(run.seed, INGEST_ROWS)
-    clients = [Pipeline(run, g, k) for k in range(INGEST_CLIENTS)]
-    warm = {c.k: g.warmup_batch(c.k, c.raw) for c in clients}
-
-    def warm_up(c: Pipeline) -> None:
-        c.process(warm[c.k])  # a pipeline's first batch also writes its drift baseline
-        c.refresh_dashboard()
+    p = Pipeline(run, g)
+    # Warm-up: the baseline batch, the heal-and-re-run path, then two clean
+    # batches (the first clean batches after a heal still ran ~25% slow).
+    warm = [g.warmup_batch(p.raw)] + [
+        g.warm_batch(n, kind, p.raw) for n, kind in enumerate(("undersized", "clean", "clean"))]
+    quota = len(gen.CYCLE) if run.trace else None
+    # Written before set-up, so the window times the pipeline, not the generator.
+    ready = [g.batch(i, p.raw) for i in range(quota or PREGEN_BATCHES)]
 
     run.start()
-    parallel(warm_up, clients)
+    for batch in warm:  # the first batch also writes the drift baseline
+        p.process(batch)
+        p.refresh_dashboard()
     run.window()
 
     deadline = run.t_window + run.seconds
-    quota = len(gen.BLOCK) // INGEST_CLIENTS if run.trace else None
-    results: list[tuple[gen.Batch, dict[str, Any], float]] = []
-    ends: list[float] = []
+    lat: list[float] = []
+    heal: list[float] = []
+    dash: list[float] = []
+    i = 0
+    # Whole cycles only: a partial cycle would shift the mix of batch kinds,
+    # and with it the percentiles, with the machine's speed.
+    while (i < quota) if quota is not None else (i % len(gen.CYCLE) or perf_counter() < deadline):
+        batch = ready[i] if i < len(ready) else g.batch(i, p.raw)
+        i += 1
+        run.attempted += 1
+        try:
+            rec = p.process(batch)
+            took, why = p.refresh_dashboard()
+        except Exception as exc:  # noqa: BLE001 - a failed batch is counted, the loop goes on
+            run.fail(f"batch {batch.index} ({batch.kind}): {type(exc).__name__}: {exc}")
+            continue
+        why = p.check(batch, rec) or why
+        if why:
+            run.fail(why)
+        lat.append(rec["latency"])
+        dash.append(took)
+        if rec["status"] == "healed_success":
+            heal.append(rec["latency"])
+    elapsed = perf_counter() - run.t_window
 
-    def loop(c: Pipeline) -> None:
-        i = 0
-        while (i < quota) if quota is not None else (perf_counter() < deadline):
-            batch = g.batch(c.k, i, c.raw, c.offset)
-            i += 1
-            try:
-                rec = c.process(batch)
-                dash, why = c.refresh_dashboard()
-            except Exception as exc:  # noqa: BLE001 - a failed batch is counted, the loop goes on
-                run.fail(f"batch c{c.k}/{batch.index} ({batch.kind}): {type(exc).__name__}: {exc}")
-                with run.lock:
-                    run.attempted += 1
-                continue
-            why = c.check(batch, rec) or why
-            if why:
-                run.fail(why)
-            with run.lock:
-                run.attempted += 1
-                results.append((batch, rec, dash))
-        with run.lock:
-            ends.append(perf_counter())
-
-    parallel(loop, clients)
-    # Each client stops after the batch that crosses the deadline; averaging
-    # the clients' end times keeps one long final batch from setting the rate.
-    elapsed = statistics.mean(ends) - run.t_window
-
-    lat = [rec["latency"] for _b, rec, _d in results]
-    heal = [rec["latency"] for _b, rec, _d in results if rec["status"] == "healed_success"]
-    dash = [d for _b, _r, d in results]
     peak = run.finish()
     if not run.trace:
         return op_metrics(lat, elapsed)
@@ -397,9 +373,7 @@ def ann_serve(run: Run) -> dict[str, Any]:
     rounds = 0
     quota = SERVE_TRACE_ROUNDS if run.trace else None
     while (rounds < quota) if quota is not None else (perf_counter() < deadline):
-        for j in rng.permutation(len(SERVE_OPS)):
-            if quota is None and perf_counter() >= deadline:
-                break
+        for j in rng.permutation(len(SERVE_OPS)):  # whole rounds: every query equally often
             name = SERVE_OPS[j]
             run.attempted += 1
             t0 = perf_counter()
