@@ -27,9 +27,9 @@ import pyarrow.parquet as pq
 
 # --- ingest ---------------------------------------------------------------
 
-CYCLE = (  # 8 batches take one pipeline run, 4 heal and re-run
-    "clean", "clean", "null_breach", "mean_shift", "clean", "required_null",
-    "non_numeric", "clean", "undersized", "clean", "missing_column", "clean",
+CYCLE = (  # 5 batches take one pipeline run, 3 heal and re-run
+    "clean", "null_breach", "clean", "mean_shift", "undersized", "clean",
+    "missing_column", "clean",
 )
 
 INT_COLS = ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
@@ -156,10 +156,12 @@ class IngestGenerator:
             column = str(rng.choice(TOLERANT_COLS))
             nums[column] = np.round(nums[column] * rng.uniform(2.0, 3.0), 2)
             text[column] = self._fmt(column, nums[column])
-        elif kind in ("null_breach", "non_numeric", "required_null"):
-            column = "l_orderkey" if kind == "required_null" else str(rng.choice(TOLERANT_COLS))
+        elif kind == "null_breach":
+            # Half the damaged cells are empty, half non-numeric; ETL reads
+            # both as NULL.
+            column = str(rng.choice(TOLERANT_COLS))
             hit = rng.random(rows) < rng.uniform(0.10, 0.30)
-            text[column][hit] = "n/a" if kind == "non_numeric" else ""
+            text[column][hit] = np.where(rng.random(int(hit.sum())) < 0.5, "", "n/a")
             nums[column][hit] = np.nan
         elif kind == "missing_column":
             cols.remove("l_linenumber")

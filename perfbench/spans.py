@@ -48,6 +48,7 @@ class Span:
     op: str
     t0: float = 0.0
     t1: float = 0.0
+    excl: float = 0.0  # tracer work done inside the span, left out of ``dur``
     spark: dict[str, float] = field(default_factory=dict)
     tags: dict[str, Any] = field(default_factory=dict)
 
@@ -57,11 +58,12 @@ class Span:
 
     @property
     def dur(self) -> float:
-        return self.t1 - self.t0
+        return self.t1 - self.t0 - self.excl
 
 
 class NullTracer:
     enabled = False
+    own_s = 0.0
 
     def span(self, layer: str, op: str):
         return nullcontext()
@@ -100,6 +102,13 @@ class Tracer:
                     self.sc.setLocalProperty("spark.jobGroup.id", None)
             self.spans.append(sp)
             self.own_s += perf_counter() - sp.t1
+
+    def exclude(self, seconds: float) -> None:
+        """Charge tracer work done inside the open spans to the tracer,
+        not to those spans."""
+        self.own_s += seconds
+        for sp in self._stack:
+            sp.excl += seconds
 
     # --- rebinding -------------------------------------------------------
     def patch(self, module: ModuleType, name: str, layer: str,
@@ -147,7 +156,6 @@ class Tracer:
                     agg["shuffle_write_mb"] += st.shuffleWriteBytes() / MB
             sp.spark = agg
 
-
     def dump(self, path: Path, origin: float) -> None:
         """Write every span as one JSON line, times relative to ``origin``."""
         path.parent.mkdir(parents=True, exist_ok=True)
@@ -160,10 +168,10 @@ class Tracer:
                 }) + "\n")
 
 
-def index_store_builds(store: Path) -> Callable[[Span, Callable[[], Any]], Any]:
+def index_store_builds(store: Path, tracer: Tracer) -> Callable[[Span, Callable[[], Any]], Any]:
     """``around`` hook for ``ensure_*``: tags the span ``built`` when the
     call wrote anything under the index store (a miss), else it served a
-    stored artifact (a hit)."""
+    stored artifact (a hit).  The two walks of the store are tracer work."""
 
     def newest() -> int:
         latest = 0
@@ -173,11 +181,15 @@ def index_store_builds(store: Path) -> Callable[[Span, Callable[[], Any]], Any]:
         return latest
 
     def around(sp: Span, call: Callable[[], Any]) -> Any:
+        c0 = perf_counter()
         before = newest()
+        tracer.exclude(perf_counter() - c0)
         try:
             return call()
         finally:
+            c0 = perf_counter()
             sp.tags["built"] = newest() > before
+            tracer.exclude(perf_counter() - c0)
 
     return around
 

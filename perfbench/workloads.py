@@ -10,7 +10,10 @@
   during set-up.
 
 Every run is: seeded inputs (untimed) -> set-up (session start, warm-up,
-index builds; this is ``setup_s``) -> a measured window -> output checks.
+index builds; this is ``setup_s``) -> a measured window.  Output checks
+are left out of the window: serve results are compared after it closes;
+an ingest batch is checked as soon as it lands (the next batch replaces
+the warehouse), and that check time is taken out of the window.
 An untraced run starts new batch cycles or serve rounds for ``seconds``
 and lets the last one finish.  A traced run processes a fixed quota
 instead (one cycle of ingest batches, two serve rounds), so its counters
@@ -30,6 +33,7 @@ import numpy as np
 import pyarrow.parquet as pq
 import yaml
 
+import env
 import gen
 import spans as sp
 from checks import Oracle
@@ -41,8 +45,18 @@ from self_healing_data_pipeline_agent_spark.sources import index_store, tables
 PKG = "self_healing_data_pipeline_agent_spark"
 SPANS_DIR = ".perfbench_spans"  # a traced run's spans, beside the work directory
 
+# Input sizes: a 20k-row ingest batch (1.6 MB of CSV) and a corpus of
+# 1000 documents, 500 embeddings and 15k orders.  Both are below TPC-H
+# sf0.1 (600k lineitem rows; 5000 / 2000 / 150k) so that one run stays near
+# a minute on a shared 4-core machine: with 137k-row batches, an
+# sf0.1-sized corpus and 20 s windows, runs took 45-55 s when the machine
+# was quiet and 85-114 s when it was contended.  At this size Spark's fixed
+# per-job cost dominates: a clean batch takes 0.96 s at 20k rows, 1.16 s at
+# 100k and 1.53 s at 300k, so scanning the batch is about 5% of its latency
+# here against about 40% at 300k rows, and a change that saves re-scans
+# moves batch latency far less than it would at sf0.1.
 INGEST_ROWS = 20_000
-PREGEN_BATCHES = 2 * len(gen.CYCLE)  # a 20 s window runs one or two cycles
+PREGEN_BATCHES = len(gen.CYCLE)  # later batches are written inside the window, untimed
 HISTORY_ROWS = 50
 CORPUS = {"n_docs": 1000, "n_vecs": 500, "n_orders": 15_000}
 # Six index-backed serve queries plus one sketch profile over the same corpus.
@@ -50,18 +64,21 @@ SERVE_OPS = ("ann_ivf_kmeans_serve", "ann_pq_serve", "ann_lsh_serve",
              "embedding_near_dup_serve", "semantic_dedup_serve", "minhash_lsh_serve",
              "one_pass_profile")
 SERVE_TRACE_ROUNDS = 2
-# Tail percentile, recorded in BENCHMARK.json.  A 20 s run on a 4-core
-# machine completes one 12-batch cycle or three 7-request rounds, so p60
-# has 4 to 8 samples beyond it.
-TAIL_PCT = 60
+# Tail percentile per workload, recorded in BENCHMARK.json.  A 5 s run on
+# a 4-core machine completes one 8-batch ingest cycle and one or two
+# 7-request serve rounds.  Three batches of each cycle heal and re-run and
+# are the slowest; p90 of a cycle falls between its two slowest, so the
+# ingest tail is the heal path's latency and the median is the single-run
+# path's.  Serve's p60 has 2 to 5 requests beyond it.
+TAIL_PCT = {"ingest_heal": 90, "ann_serve": 60}
 
 
-def op_metrics(lat: list[float], elapsed: float) -> dict[str, float]:
+def op_metrics(name: str, lat: list[float], elapsed: float) -> dict[str, float]:
     """End-to-end figures over the operations (ingest batches or serve
     requests) that completed in the window."""
     return {
         "latency_p50_ms": 1000 * statistics.median(lat),
-        "latency_tail_ms": 1000 * float(np.percentile(lat, TAIL_PCT)),
+        "latency_tail_ms": 1000 * float(np.percentile(lat, TAIL_PCT[name])),
         "throughput_per_s": len(lat) / elapsed,
     }
 
@@ -69,13 +86,11 @@ def op_metrics(lat: list[float], elapsed: float) -> dict[str, float]:
 class Run:
     """State shared by one benchmark run."""
 
-    def __init__(self, name: str, seed: int, seconds: float, trace: bool,
-                 work: Path, session_cls, sampler_cls) -> None:
+    def __init__(self, name: str, seed: int, seconds: float, trace: bool, work: Path) -> None:
         self.name, self.seed, self.seconds, self.trace = name, seed, seconds, trace
         self.work = work
         self.spans_path = work.parents[1] / SPANS_DIR / f"{name}-seed{seed}.jsonl"
         self.tracer = sp.Tracer() if trace else sp.NullTracer()
-        self.session_cls, self.sampler_cls = session_cls, sampler_cls
         self.failures: list[str] = []
         self.attempted = 0
 
@@ -87,16 +102,17 @@ class Run:
         self.t_setup = perf_counter()
         if self.trace:
             install_patches(self.tracer, self.work / "indexes")
-        self.session = self.session_cls(self.work, self.tracer)
+        self.session = env.Session(self.work, self.tracer)
         self.spark = self.session.spark
         if self.trace:
-            self.sampler = self.sampler_cls(self.session.jvm_pid)
+            self.sampler = env.RssSampler(self.session.jvm_pid)
             self.tracer.sc = self.spark.sparkContext
 
     def window(self) -> None:
         """Set-up is over; the measured window starts."""
         self.t_window = perf_counter()
         self.setup_s = self.t_window - self.t_setup
+        self.own_s_setup = self.tracer.own_s  # tracer bookkeeping during set-up
 
     def finish(self) -> float:
         """End the run; a traced run returns its peak RSS in MB (the
@@ -127,7 +143,7 @@ def install_patches(tracer: sp.Tracer, store: Path) -> None:
     tracer.patch(healing, "load_contract", "contract")
     tracer.patch(healing, "save_contract", "contract")
     ensure = {getattr(index_store, n) for n in dir(index_store) if n.startswith("ensure_")}
-    hook = sp.index_store_builds(store)
+    hook = sp.index_store_builds(store, tracer)
     for modname, mod in list(sys.modules.items()):
         if not modname.startswith(PKG + ".") or mod in (tables, contract):
             continue
@@ -177,7 +193,7 @@ def per_layer(run: Run, units: float, unit_latencies: list[float],
     out["session.peak_rss_mb"] = peak_rss_mb
 
     top = sum(s.dur for s in window if s.parent == 0)
-    out["trace.overhead_frac"] = tracer.own_s / top if top else 0.0
+    out["trace.overhead_frac"] = (tracer.own_s - run.own_s_setup) / top if top else 0.0
     out["trace.unit_p50_s"] = statistics.median(unit_latencies) if unit_latencies else 0.0
     return out
 
@@ -253,7 +269,8 @@ class Pipeline:
         rec["latency"] = perf_counter() - t0
         return rec
 
-    def refresh_dashboard(self) -> tuple[float, str | None]:
+    def refresh_dashboard(self) -> tuple[float, tuple[dict, list, Any]]:
+        """The dashboard's three reads; returns their time and results."""
         tracer = self.run.tracer
         t0 = perf_counter()
         with tracer.span("incidents", "load"):
@@ -264,15 +281,18 @@ class Pipeline:
             history = dashboard.run_history(inc).limit(HISTORY_ROWS).collect()
         with tracer.span("dashboard", "get_run"):
             row = dashboard.get_run(inc, self.last_run_id)
-        took = perf_counter() - t0
+        return perf_counter() - t0, (counts, history, row)
+
+    def check_dashboard(self, view: tuple[dict, list, Any]) -> str | None:
+        counts, history, row = view
         ids = [r["run_id"] for r in history]
         if counts["total"] != self.logged:
-            return took, f"dashboard: total {counts['total']} != {self.logged} logged"
+            return f"dashboard: total {counts['total']} != {self.logged} logged"
         if len(ids) != min(HISTORY_ROWS, self.logged) or ids != sorted(ids, reverse=True):
-            return took, "dashboard: run history not the newest-first log"
+            return "dashboard: run history not the newest-first log"
         if row is None or row["status"] != self.last_status:
-            return took, f"dashboard: get_run({self.last_run_id}) wrong"
-        return took, None
+            return f"dashboard: get_run({self.last_run_id}) wrong"
+        return None
 
     def check(self, batch: gen.Batch, rec: dict[str, Any]) -> str | None:
         exp = batch.expected
@@ -314,31 +334,37 @@ def ingest_heal(run: Run) -> dict[str, Any]:
     lat: list[float] = []
     heal: list[float] = []
     dash: list[float] = []
+    untimed = 0.0  # output checks, and batches generated late, inside the window
     i = 0
     # Whole cycles only: a partial cycle would shift the mix of batch kinds,
     # and with it the percentiles, with the machine's speed.
-    while (i < quota) if quota is not None else (i % len(gen.CYCLE) or perf_counter() < deadline):
+    while (i < quota) if quota is not None else (
+            i % len(gen.CYCLE) or perf_counter() - untimed < deadline):
+        t0 = perf_counter()
         batch = ready[i] if i < len(ready) else g.batch(i, p.raw)
+        untimed += perf_counter() - t0
         i += 1
         run.attempted += 1
         try:
             rec = p.process(batch)
-            took, why = p.refresh_dashboard()
+            took, view = p.refresh_dashboard()
         except Exception as exc:  # noqa: BLE001 - a failed batch is counted, the loop goes on
             run.fail(f"batch {batch.index} ({batch.kind}): {type(exc).__name__}: {exc}")
             continue
-        why = p.check(batch, rec) or why
+        t0 = perf_counter()
+        why = p.check(batch, rec) or p.check_dashboard(view)
+        untimed += perf_counter() - t0
         if why:
             run.fail(why)
         lat.append(rec["latency"])
         dash.append(took)
         if rec["status"] == "healed_success":
             heal.append(rec["latency"])
-    elapsed = perf_counter() - run.t_window
+    elapsed = perf_counter() - run.t_window - untimed
 
     peak = run.finish()
     if not run.trace:
-        return op_metrics(lat, elapsed)
+        return op_metrics(run.name, lat, elapsed)
     out = per_layer(run, 1.0, lat, peak)
     out["ingest.heal_recovery_p50_s"] = statistics.median(heal) if heal else 0.0
     out["ingest.dashboard_p50_ms"] = 1000 * statistics.median(dash) if dash else 0.0
@@ -370,6 +396,7 @@ def ann_serve(run: Run) -> dict[str, Any]:
     rng = np.random.default_rng([run.seed, 20])
     deadline = run.t_window + run.seconds
     lat: list[float] = []
+    results: list[tuple[str, list[str], list[tuple]]] = []
     rounds = 0
     quota = SERVE_TRACE_ROUNDS if run.trace else None
     while (rounds < quota) if quota is not None else (perf_counter() < deadline):
@@ -378,27 +405,29 @@ def ann_serve(run: Run) -> dict[str, Any]:
             run.attempted += 1
             t0 = perf_counter()
             try:
-                result = serve(name)
+                results.append((name, *serve(name)))
             except Exception as exc:  # noqa: BLE001 - a failed request is counted, the loop goes on
                 run.fail(f"{name}: {type(exc).__name__}: {exc}")
                 continue
             lat.append(perf_counter() - t0)
-            why = oracle.mismatch(name, *result)
-            if why:
-                run.fail(why)
         rounds += 1
     elapsed = perf_counter() - run.t_window
+    for name, columns, rows in results:
+        why = oracle.mismatch(name, columns, rows)
+        if why:
+            run.fail(why)
     oracle.close()
 
     peak = run.finish()
     if run.trace:
         return per_layer(run, float(rounds), lat, peak)
-    return op_metrics(lat, elapsed)
+    return op_metrics(run.name, lat, elapsed)
 
 
-def run(name: str, seed: int, seconds: float, trace: bool, work: Path,
-        session_cls, sampler_cls) -> dict[str, Any]:
-    r = Run(name, seed, seconds, trace, work, session_cls, sampler_cls)
+def run(name: str, seed: int, seconds: float, trace: bool, work: Path) -> dict[str, Any]:
+    """One benchmark run; metric values are bare numbers, units come from
+    BENCHMARK.json."""
+    r = Run(name, seed, seconds, trace, work)
     metrics = ingest_heal(r) if name == "ingest_heal" else ann_serve(r)
     if not trace:
         metrics["setup_s"] = r.setup_s
@@ -407,19 +436,7 @@ def run(name: str, seed: int, seconds: float, trace: bool, work: Path,
         "correct": not r.failures,
         "attempted": r.attempted,
         "failed": len(r.failures),
-        "metrics": {k: {"value": float(v), "unit": unit(k)} for k, v in sorted(metrics.items())},
+        "metrics": metrics,
         "failures": r.failures,
     }
 
-
-UNITS = {"ok_frac": "ratio", "session.peak_rss_mb": "MB", "throughput_per_s": "1/s"}
-
-
-def unit(metric: str) -> str:
-    if metric in UNITS:
-        return UNITS[metric]
-    for suffix, u in (("_ms", "ms"), ("_s", "s"), ("_mb", "MB"), ("_ratio", "ratio"),
-                      ("_frac", "ratio"), ("_per_batch", "ratio")):
-        if metric.endswith(suffix):
-            return u
-    return "count"
