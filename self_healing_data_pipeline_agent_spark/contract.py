@@ -24,6 +24,8 @@ from typing import Any
 
 import yaml
 
+from .atomic import atomic_write
+
 # config type name -> Spark DDL type for try_cast
 SPARK_TYPE_FOR: dict[str, str] = {
     "int": "bigint",
@@ -120,6 +122,6 @@ def load_contract(path: str | Path) -> Contract:
 
 def save_contract(contract: Contract, path: str | Path) -> None:
     # sort_keys=False: keep the author's key order stable across heal cycles
-    # (reference behavior at src/self_healing_agent.py:119-123).
-    with open(path, "w") as f:
-        yaml.safe_dump(contract.raw, f, sort_keys=False)
+    # (reference behavior at src/self_healing_agent.py:119-123).  Replaced
+    # atomically: a truncated contract would break every later run.
+    atomic_write(path, lambda f: yaml.safe_dump(contract.raw, f, sort_keys=False))

@@ -13,9 +13,16 @@ Reference semantics (``/root/reference/src/drift_detector.py``):
 - drift never fails the run — it only reports (``:82-87``).
 
 Spark-first restructuring: the reference profiles one pandas pass per column;
-here the whole profile is **one** ``df.agg`` job (map-side partial aggs, no
-shuffle).  The comparison itself is tiny scalar math driver-side; at 100 TB
-the profiles stay tiny (one row per column) so this never becomes data-sized.
+here the whole profile is one list of aggregate expressions,
+``profile_exprs``.  On the runner path they are folded into the warehouse
+write (``etl.run_etl`` observes them on the written frame), so drift
+detection launches no Spark job of its own; ``build_profile`` evaluates the
+same expressions on a bare DataFrame as one ``df.agg`` (map-side partial
+aggs, no shuffle).  ``profile_from_row`` turns either aggregated row into
+the profile.  The comparison itself is tiny scalar Python math; at
+100 TB the profiles stay tiny (one row per column) so this never becomes
+data-sized.  The profile file is replaced atomically, so a crashed save
+never leaves a truncated baseline behind.
 """
 
 from __future__ import annotations
@@ -24,11 +31,15 @@ import json
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from .atomic import atomic_write
 from .contract import Contract
+
+# alias prefixes of the profile aggregates
+_MEAN, _STD = "__mean__", "__std__"
 
 
 def numeric_columns(df: DataFrame) -> list[str]:
@@ -36,29 +47,37 @@ def numeric_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
 
 
-def build_profile(df: DataFrame) -> dict[str, Any]:
-    """Per numeric column ``{mean, std}`` over non-nulls, in ONE agg job.
-
-    Columns that are entirely null/empty are skipped (reference ``:20-22``
-    skips after dropna leaves nothing).  stddev of a single value is 0.0.
-    """
-    cols = numeric_columns(df)
-    if not cols:
-        return {"columns": {}}
+def profile_exprs(df: DataFrame) -> list[Column]:
+    """Per numeric column: mean and sample stddev over non-nulls; the
+    stddev of a single value is 0.0, not NULL."""
     aggs = []
-    for c in cols:
-        aggs.append(F.avg(F.col(c)).alias(f"__mean__{c}"))
+    for c in numeric_columns(df):
+        aggs.append(F.avg(F.col(c)).alias(f"{_MEAN}{c}"))
         aggs.append(
-            F.coalesce(F.stddev_samp(F.col(c)), F.lit(0.0)).alias(f"__std__{c}")
+            F.coalesce(F.stddev_samp(F.col(c)), F.lit(0.0)).alias(f"{_STD}{c}")
         )
-    row = df.agg(*aggs).collect()[0].asDict()
+    return aggs
+
+
+def profile_from_row(row: dict[str, Any]) -> dict[str, Any]:
+    """The profile from a row aggregated with ``profile_exprs`` (other keys
+    in ``row`` are ignored).  Columns that are entirely null/empty are
+    skipped (reference ``:20-22`` skips after dropna leaves nothing)."""
     profile: dict[str, Any] = {"columns": {}}
-    for c in cols:
-        mean = row[f"__mean__{c}"]
-        if mean is None:  # all-null column -> no profile entry
+    for k, mean in row.items():
+        if not k.startswith(_MEAN) or mean is None:
             continue
-        profile["columns"][c] = {"mean": float(mean), "std": float(row[f"__std__{c}"])}
+        c = k.removeprefix(_MEAN)
+        profile["columns"][c] = {"mean": float(mean), "std": float(row[f"{_STD}{c}"])}
     return profile
+
+
+def build_profile(df: DataFrame) -> dict[str, Any]:
+    """Per numeric column ``{mean, std}`` over non-nulls, in ONE agg job."""
+    aggs = profile_exprs(df)
+    if not aggs:
+        return {"columns": {}}
+    return profile_from_row(df.agg(*aggs).collect()[0].asDict())
 
 
 def load_profile(path: str | Path) -> dict[str, Any] | None:
@@ -70,10 +89,7 @@ def load_profile(path: str | Path) -> dict[str, Any] | None:
 
 
 def save_profile(profile: dict[str, Any], path: str | Path) -> None:
-    p = Path(path)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    with open(p, "w") as f:
-        json.dump(profile, f, indent=2)
+    atomic_write(path, lambda f: json.dump(profile, f, indent=2))
 
 
 def compare_profiles(
@@ -102,14 +118,15 @@ def compare_profiles(
 
 
 def detect_and_update_drift(
-    df: DataFrame, contract: Contract, base_dir: str | Path
+    contract: Contract, base_dir: str | Path, current: dict[str, Any]
 ) -> dict[str, Any]:
-    """Bootstrap-or-compare control flow (reference ``:29-87``).
+    """Bootstrap-or-compare control flow (reference ``:29-87``) for the
+    ``current`` profile (the runner passes the one observed on the
+    warehouse write; ``build_profile`` gives it for a bare DataFrame).
 
     Never raises; always returns a drift report dict.
     """
     profile_path = Path(base_dir) / contract.drift_profile_path
-    current = build_profile(df)
     baseline = load_profile(profile_path)
     if baseline is None:
         save_profile(current, profile_path)

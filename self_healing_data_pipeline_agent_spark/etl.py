@@ -20,16 +20,27 @@ as one lazy Spark logical plan:
 
 At scale: the scan is a distributed CSV read; the sink is an overwrite-mode
 parquet table write.  Everything between is a narrow plan (no shuffle).
+
+Single pass: the DQ stats and the drift profile are folded into the
+warehouse write on the runner path.  ``run_etl`` attaches both modules'
+aggregate expressions to the written frame with ``DataFrame.observe``, so
+the write's own job computes them and no extra job re-scans the source.
+They are attached to the exact frame handed to the writer, after any
+``cluster_by`` layout: observed below ``repartitionByRange`` they would
+also count the rows its bounds-sampling job re-reads.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
+from typing import Any, NamedTuple, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from .contract import Contract
+from .drift import profile_exprs, profile_from_row
 from .logger import get_logger
+from .quality import dq_stat_exprs, dq_stats_from_row
 
 log = get_logger(__name__)
 
@@ -72,7 +83,12 @@ def project_and_cast(df: DataFrame, contract: Contract) -> DataFrame:
     return df.select(*cols)
 
 
-def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> str:
+def write_warehouse(
+    df: DataFrame,
+    contract: Contract,
+    base_dir: str | Path,
+    observe: tuple[Observation, Sequence[Column]] | None = None,
+) -> str:
     """Full-refresh sink: overwrite the warehouse table (parquet directory).
 
     The reference's truncate+insert into DuckDB (src/etl_job.py:75-80) keeps
@@ -84,6 +100,10 @@ def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> 
     catalog.  At 100 TB this is the co-location contract — every
     downstream join or aggregation on the bucket key skips its shuffle
     entirely, the largest single cost in repeated warehouse workloads.
+
+    With ``observe=(observation, metrics)`` (at least one metric), the
+    aggregate ``metrics`` are observed on the frame the writer consumes;
+    ``observation.get`` holds them once this returns.
     """
     out = str(Path(base_dir) / contract.warehouse_path / contract.table_name)
     bucket = contract.raw.get("bucket_by")
@@ -105,6 +125,9 @@ def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> 
             df.repartitionByRange(int(n), *cols) if n
             else df.repartitionByRange(*cols)
         ).sortWithinPartitions(*cols)
+    if observe is not None:
+        observation, metrics = observe
+        df = df.observe(observation, *metrics)
     if bucket:
         (
             df.write.mode("overwrite")
@@ -126,10 +149,22 @@ def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> 
     return out
 
 
-def run_etl(spark: SparkSession, contract: Contract, base_dir: str | Path) -> DataFrame:
-    """Full ETL for one run; returns the casted DataFrame (lazy plan over the
-    source) for downstream DQ + drift.  Warehouse write happens here, before
-    any DQ gate — matching the reference's observable ordering."""
+class EtlResult(NamedTuple):
+    """One ETL run: the casted frame (a lazy plan over the source) and its
+    DQ stats and drift profile, observed on the warehouse write."""
+
+    df: DataFrame
+    dq_stats: dict[str, Any]
+    profile: dict[str, Any]
+
+
+def run_etl(spark: SparkSession, contract: Contract, base_dir: str | Path) -> EtlResult:
+    """Full ETL for one run, plus the statistics downstream DQ + drift need,
+    computed by the write's own job.  The warehouse write happens here,
+    before any DQ gate — matching the reference's observable ordering."""
     df = project_and_cast(read_source(spark, contract, base_dir), contract)
-    write_warehouse(df, contract, base_dir)
-    return df
+    observation = Observation()
+    write_warehouse(df, contract, base_dir,
+                    (observation, dq_stat_exprs(df, contract) + profile_exprs(df)))
+    row = observation.get
+    return EtlResult(df, dq_stats_from_row(row), profile_from_row(row))

@@ -57,11 +57,16 @@ def run_single_pipeline(
     description: str = "",
 ) -> dict[str, Any]:
     """O1 (reference ``:48-61``): one pipeline run.  Raises
-    ``DataQualityError`` on DQ failure (after the warehouse write)."""
+    ``DataQualityError`` on DQ failure (after the warehouse write).
+
+    Spark work happens only inside ETL (the source scan's header read and
+    the warehouse write): DQ and drift are evaluated from the stats
+    observed on the write."""
     contract = load_contract(contract_path)  # reloaded fresh every run (:50)
-    df = run_etl(spark, contract, base_dir)
-    dq_report = enforce_data_quality(df, contract)  # raises on failure
-    drift_report = detect_and_update_drift(df, contract, base_dir)
+    etl = run_etl(spark, contract, base_dir)
+    # raises on failure, so only a run that passed DQ can create the baseline
+    dq_report = enforce_data_quality(etl.df, contract, etl.dq_stats)
+    drift_report = detect_and_update_drift(contract, base_dir, etl.profile)
     return {"dq_report": dq_report, "drift_report": drift_report}
 
 

@@ -256,7 +256,7 @@ def test_warehouse_written_before_dq_gate(spark, tmp_path):
                     "age": {"type": "int", "max_null_fraction": 0.1}},
         "quality": {"row_count_min": 1},
     })
-    df = run_etl(spark, contract, tmp_path)
+    df = run_etl(spark, contract, tmp_path).df
     with pytest.raises(DataQualityError):
         enforce_data_quality(df, contract)
     out = spark.read.parquet(str(tmp_path / "data/warehouse/customers"))
